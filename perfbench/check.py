@@ -7,11 +7,13 @@ and the resample's SQL, and compared with
 * the snapshot of what the task wrote, taken right after it returned
   (a mismatch fails the task), and
 * the variable's final DRS directory after the whole run. A task whose
-  slice is no longer there is a *lost slice*: `Sink.writeDrs` replaces a
-  variable's directory on every slice it writes.
+  slice is no longer there is a *lost slice*, which run.py counts as a
+  failed task: `Sink.writeDrs` replaces a variable's directory on every
+  slice it writes.
 
-Query workloads: each query's output (written by an untimed check pass)
-is compared with its `oracleSql` twin where one exists.
+Query workloads: the parquet outputs of the newest timed pass are
+compared with their `oracleSql` twins, where one exists, over the same
+tables.
 
 Floats compare exactly, else within a relative 1e-12 (a last-bit
 difference between the two engines' libm).

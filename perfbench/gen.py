@@ -1,18 +1,13 @@
-"""Seeded input generator for the benchmark.
+"""Seeded input generator for the benchmark's catalog workloads.
 
-Everything the benchmark feeds the program is made here from the seed:
+``field/`` is a long-format sub-daily raw field (3-hourly, one year,
+``CELLS`` grid cells) with the raw input columns the catalog maps, one
+file per month in weekly row groups, the way model output arrives.
 
-* ``field/``: a long-format sub-daily raw field (3-hourly, one year,
-  ``CELLS`` grid cells) with the raw input columns the catalog maps, one
-  file per month in weekly row groups, the way model output arrives;
-* ``tables/``: the operator queries' star schema (region, nation,
-  customer, supplier, part, orders, lineitem, events, documents,
-  embeddings), with the row counts and value domains of the sf0.1 layout
-  the query suite is written against;
-* ``tables_small/``: the same schema at 1/10 of the rows (sf0.01).
-
-The seed changes values only: row counts, time axes, key ranges and file
-names are fixed, so every seed gives the same shapes.
+The seed changes values only: row counts, the time axis and file names
+are fixed, so every seed gives the same shapes. The query workloads read
+the committed tables under ``perfbench/testdata`` instead; their seed
+drives only the query order.
 """
 import hashlib
 import json
@@ -29,32 +24,6 @@ FIELD_STEP_S = 3 * 3600
 FIELD_STEPS = 365 * 8
 CELLS = 96
 FIELD_COLS = ["fld_ta", "fld_rain", "fld_snow", "fld_u", "fld_v", "fld_ps", "fld_q"]
-
-# Rows of each query table at sf0.1.
-TABLE_ROWS = {
-    "customer": 15000, "supplier": 1000, "part": 20000, "orders": 150000,
-    "lineitem": 600000, "events": 100000, "documents": 5000, "embeddings": 2000,
-}
-
-WORDS = ("spark window merge table column vector stream value data small join "
-         "filter big group hash customer sort order slow line part fast row the "
-         "agg key query a scan batch").split()
-SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-PTYPES = ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"]
-ADJ = ["blue", "cold", "hot", "large", "new", "old", "red", "small"]
-NOUN = ["anvil", "bolt", "gear", "gizmo", "plate", "ring", "rod", "widget"]
-EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-LANGS = ["en", "en", "de", "es", "fr", "zh"]
-
-
-def _ts(days_from, days_span, rng, n, base="1995-01-01"):
-    d = rng.integers(0, days_span, n)
-    return (np.datetime64(base, "us") + (days_from + d) * np.timedelta64(86400, "s")).astype("datetime64[us]")
-
-
-def _write(table, path):
-    pq.write_table(table, path, compression="snappy")
 
 
 def field(rng):
@@ -89,98 +58,6 @@ def write_field(table, root):
                        compression="snappy", row_group_size=7 * 8 * CELLS)
 
 
-def tables(rng, div=1):
-    n = {k: v // div for k, v in TABLE_ROWS.items()}
-    n["documents"] = max(n["documents"], 500)
-    n["embeddings"] = max(n["embeddings"], 500)
-    out = {}
-    out["region"] = pa.table({
-        "r_regionkey": pa.array(np.arange(5, dtype=np.int32)),
-        "r_name": ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]})
-    out["nation"] = pa.table({
-        "n_nationkey": pa.array(np.arange(25, dtype=np.int32)),
-        "n_name": [f"NATION_{i}" for i in range(25)],
-        "n_regionkey": pa.array(np.arange(25, dtype=np.int32) % 5)})
-    k = n["customer"]
-    out["customer"] = pa.table({
-        "c_custkey": np.arange(k, dtype=np.int64),
-        "c_name": [f"Customer#{i:09d}" for i in range(k)],
-        "c_nationkey": pa.array(rng.integers(0, 25, k).astype(np.int32)),
-        "c_acctbal": np.round(rng.uniform(-999.99, 9999.99, k), 2),
-        "c_mktsegment": pa.array(rng.choice(SEGMENTS, k))})
-    k = n["supplier"]
-    out["supplier"] = pa.table({
-        "s_suppkey": np.arange(k, dtype=np.int64),
-        "s_name": [f"Supplier#{i:09d}" for i in range(k)],
-        "s_nationkey": pa.array(rng.integers(0, 25, k).astype(np.int32)),
-        "s_acctbal": np.round(rng.uniform(-999.99, 9999.99, k), 2)})
-    k = n["part"]
-    out["part"] = pa.table({
-        "p_partkey": np.arange(k, dtype=np.int64),
-        "p_name": pa.array(np.char.add(np.char.add(rng.choice(ADJ, k), " "), rng.choice(NOUN, k))),
-        "p_brand": pa.array(np.char.add("Brand#", rng.integers(1, 26, k).astype(str))),
-        "p_type": pa.array(rng.choice(PTYPES, k)),
-        "p_size": pa.array(rng.integers(1, 51, k).astype(np.int32)),
-        "p_retailprice": np.round(900 + (np.arange(k) % 1000) * 0.1, 1)})
-    k = n["orders"]
-    out["orders"] = pa.table({
-        "o_orderkey": np.arange(k, dtype=np.int64),
-        "o_custkey": rng.integers(0, n["customer"], k).astype(np.int64),
-        "o_orderstatus": pa.array(rng.choice(["F", "O", "P"], k)),
-        "o_totalprice": np.round(rng.uniform(1000, 500000, k), 2),
-        "o_orderdate": pa.array(_ts(0, 2404, rng, k), pa.timestamp("us")),
-        "o_orderpriority": pa.array(rng.choice(PRIORITIES, k))})
-    k = n["lineitem"]
-    out["lineitem"] = pa.table({
-        "l_orderkey": rng.integers(0, n["orders"], k).astype(np.int64),
-        "l_partkey": rng.integers(0, n["part"], k).astype(np.int64),
-        "l_suppkey": rng.integers(0, n["supplier"], k).astype(np.int64),
-        "l_linenumber": pa.array(rng.integers(1, 8, k).astype(np.int32)),
-        "l_quantity": rng.integers(1, 51, k).astype(np.float64),
-        "l_extendedprice": np.round(rng.uniform(900, 105000, k), 2),
-        "l_discount": rng.integers(0, 11, k) / 100.0,
-        "l_tax": rng.integers(0, 9, k) / 100.0,
-        "l_returnflag": pa.array(rng.choice(["A", "N", "R"], k)),
-        "l_linestatus": pa.array(rng.choice(["F", "O"], k)),
-        "l_shipdate": pa.array(_ts(1, 2498, rng, k), pa.timestamp("us"))})
-    k = n["events"]
-    offs = np.sort(rng.integers(0, 30 * 86400 * 10**6, k))
-    out["events"] = pa.table({
-        "event_id": np.arange(k, dtype=np.int64),
-        "ts": pa.array(np.datetime64("2024-01-01", "us") + offs.astype("timedelta64[us]"),
-                       pa.timestamp("us")),
-        "user_id": rng.integers(0, max(k // 66, 10), k).astype(np.int64),
-        "event_type": pa.array(rng.choice(EVENT_TYPES, k)),
-        "value": np.round(rng.exponential(50, k), 2),
-        "props": [f'{{"k": {v}}}' for v in rng.integers(0, 100, k)]})
-    k = n["documents"]
-    texts = []
-    for i in range(k):
-        r = rng.random()
-        if i > 10 and r < 0.002:
-            texts.append(texts[rng.integers(0, i)])
-        elif i > 10 and r < 0.05:
-            texts.append(texts[rng.integers(0, i)] + " dup")
-        else:
-            texts.append(" ".join(rng.choice(WORDS, rng.integers(10, 101))))
-    out["documents"] = pa.table({
-        "doc_id": np.arange(k, dtype=np.int64),
-        "text": texts,
-        "lang": pa.array(rng.choice(LANGS, k)),
-        "source": [f"src{i % 20}" for i in range(k)],
-        "n_chars": np.array([len(t) for t in texts], dtype=np.int64)})
-    k = n["embeddings"]
-    labels = rng.integers(0, 10, k)
-    centres = rng.normal(0, 1, (10, 64))
-    vec = centres[labels] + rng.normal(0, 0.8, (k, 64))
-    vec = (vec / np.linalg.norm(vec, axis=1, keepdims=True)).astype(np.float32)
-    out["embeddings"] = pa.table({
-        "vec_id": np.arange(k, dtype=np.int64),
-        "embedding": pa.array(list(vec), pa.list_(pa.float32())),
-        "label": pa.array(labels.astype(np.int32))})
-    return out
-
-
 def checksum(path):
     h = hashlib.sha256()
     with open(path, "rb") as f:
@@ -189,33 +66,19 @@ def checksum(path):
     return h.hexdigest()
 
 
-# Input sets: name -> rows divisor of the query tables (None: the raw field).
-PARTS = {"field": None, "tables": 1, "tables_small": 10}
-
-
-def generate(root, seed, parts):
-    """Write the seed's input sets `parts` under `root`, each once (a
-    finished set is marked by `<part>.json`, its file checksums), and
-    return {relative file: sha256} over those sets. Each set draws from
-    its own stream of the seed, so the sets do not depend on each other."""
+def generate(root, seed):
+    """Write the seed's raw field under `root/field` once (a finished
+    field is marked by `field.json`, its file checksums) and return
+    {relative file: sha256}."""
     os.makedirs(root, exist_ok=True)
-    manifest = {}
-    for part in parts:
-        marker = os.path.join(root, part + ".json")
-        if not os.path.exists(marker):
-            rng = np.random.default_rng([seed, list(PARTS).index(part)])
-            d = os.path.join(root, part)
-            shutil.rmtree(d, ignore_errors=True)
-            if PARTS[part] is None:
-                write_field(field(rng), d)
-            else:
-                os.makedirs(d)
-                for name, t in tables(rng, PARTS[part]).items():
-                    _write(t, os.path.join(d, f"{name}.parquet"))
-            sums = {f"{part}/{f}": checksum(os.path.join(d, f)) for f in sorted(os.listdir(d))}
-            with open(marker + ".tmp", "w") as f:
-                json.dump(sums, f, indent=1, sort_keys=True)
-            os.replace(marker + ".tmp", marker)
-        with open(marker) as f:
-            manifest.update(json.load(f))
-    return manifest
+    marker = os.path.join(root, "field.json")
+    if not os.path.exists(marker):
+        d = os.path.join(root, "field")
+        shutil.rmtree(d, ignore_errors=True)
+        write_field(field(np.random.default_rng(seed)), d)
+        sums = {f"field/{f}": checksum(os.path.join(d, f)) for f in sorted(os.listdir(d))}
+        with open(marker + ".tmp", "w") as f:
+            json.dump(sums, f, indent=1, sort_keys=True)
+        os.replace(marker + ".tmp", marker)
+    with open(marker) as f:
+        return json.load(f)

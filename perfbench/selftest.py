@@ -2,11 +2,13 @@
 
     python3 perfbench/selftest.py [seed]
 
-The same seed, generated twice, must give identical input checksums, an
+The same seed, generated twice, must give an identical raw field, an
 identical catalog and an identical task list (resolve → plan, for both
 catalog workloads). Another seed must give the same shapes (files,
-schemas, row counts, task ids and slice ranges, query lists) with
-different values. Exits non-zero on the first difference.
+schemas, row counts, task ids and slice ranges) with different values.
+The query workloads' committed tables must match `testdata/SHA256SUMS`,
+and their query lists must be free of duplicates. Exits non-zero on the
+first difference.
 """
 import json
 import os
@@ -50,16 +52,14 @@ def main():
     root = os.getcwd()
     base = os.path.join(root, build.BUILD, "selftest")
     shutil.rmtree(base, ignore_errors=True)
-    parts = sorted(gen.PARTS)
-    a1 = gen.generate(os.path.join(base, "a1"), seed, parts)
-    a2 = gen.generate(os.path.join(base, "a2"), seed, parts)
-    b = gen.generate(os.path.join(base, "b"), other, parts)
+    a1 = gen.generate(os.path.join(base, "a1"), seed)
+    a2 = gen.generate(os.path.join(base, "a2"), seed)
+    b = gen.generate(os.path.join(base, "b"), other)
     expect(a1 == a2, f"seed {seed} twice: identical checksums of {len(a1)} input files")
     expect(sorted(a1) == sorted(b), f"seed {other}: the same input files")
     expect(shapes(os.path.join(base, "a1"), a1) == shapes(os.path.join(base, "b"), b),
            f"seed {other}: the same schemas and row counts")
-    expect(all(a1[f] != b[f] for f in a1 if not f.endswith(("region.parquet", "nation.parquet"))),
-           f"seed {other}: different values in every seeded file")
+    expect(all(a1[f] != b[f] for f in a1), f"seed {other}: different values in every file")
 
     classpath = build.build(root)
     for w in ("mop_monthly", "mop_subdaily"):
@@ -71,7 +71,13 @@ def main():
         key = lambda p: sorted((t["id"], t["start_us"], t["end_us"], t["drs"]) for t in p["tasks"])
         expect(key(p1) == key(q) and p1["unmatched"] == q["unmatched"],
                f"{w} seed {other}: the same tasks and slices")
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "workloads.json")) as f:
+    here = os.path.dirname(os.path.abspath(__file__))
+    tables = os.path.join(here, "testdata")
+    with open(os.path.join(tables, "SHA256SUMS")) as f:
+        sums = [line.split() for line in f if line.strip()]
+    expect(all(gen.checksum(os.path.join(tables, rel)) == h for h, rel in sums),
+           f"the {len(sums)} committed query tables match SHA256SUMS")
+    with open(os.path.join(here, "workloads.json")) as f:
         lists = json.load(f)
     expect(all(len(v) == len(set(v)) for v in lists.values()),
            "query lists are fixed and free of duplicates")

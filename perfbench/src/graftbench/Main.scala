@@ -9,7 +9,7 @@ import graft.SparkEntry
 /** Benchmark driver process. run.py starts it once per run:
   *
   *   --workload W --seed N --seconds S --trace 0|1 --inputs DIR --out DIR
-  *   [--queries q1,q2,... --data SUBDIR --warm SUBDIR] [--plan-only 1]
+  *   [--queries q1,q2,... --data DIR --warm DIR --warm-passes K] [--plan-only 1]
   *
   * It sets up a local Spark driver, runs the workload as a closed loop of
   * units (one catalog run, or one pass over the query list) from this
@@ -46,9 +46,10 @@ object Main {
     val queries = opt.get("queries").map(_.split(",").toSeq).getOrElse(Nil)
     val isMop = workload.startsWith("mop_")
     val field = inputs.resolve("field").toString
-    // query workloads: timed and checked on --data, warmed up on --warm
-    val data = opt.get("data").map(inputs.resolve(_).toString).orNull
-    val warm = opt.get("warm").map(inputs.resolve(_).toString).orNull
+    // query workloads: timed and checked on --data, warmed up by K passes on --warm
+    val data = opt.get("data").orNull
+    val warm = opt.get("warm").orNull
+    val warmPasses = opt.get("warm-passes").fold(1)(_.toInt)
     Files.createDirectories(out)
 
     // ---- set-up: JVM start → session ready → warm-up on the warm-up inputs
@@ -71,7 +72,7 @@ object Main {
     }
     if (isMop) Mop.unit(spark, tr, field, workload, seed, out.resolve("warm").toString, None,
       warmUp = true)
-    else queries.foreach(q => Queries.runOne(spark, tr, q, warm, Queries.noop))
+    else for (_ <- 1 to warmPasses) queries.foreach(q => Queries.runOne(spark, tr, q, warm, Queries.noop))
     val setupS = (System.currentTimeMillis() - jvmStartMs) / 1e3
     log(f"set-up: $setupS%.2f s")
     tr.install(spark)
